@@ -1,8 +1,11 @@
 package graft.exec
 
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+import java.util.regex.{Pattern, PatternSyntaxException}
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{MissingNode, TextNode}
 import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
 
 import graft.compile.{ConstraintCompiler, FormatSpecs}
 import graft.dsl.{Constraint, ConstraintSuite}
@@ -13,27 +16,46 @@ import graft.registry.ConstraintRegistry
  * Single-DOCUMENT validation — the reference's primary API shape
  * (`BlazeValidator.validate(template, jsonString) → boolean`,
  * `BlazeWrapper.java`): evaluate a resolved constraint suite directly
- * over one Jackson tree, no SparkSession, no job — microseconds per
- * document. The same [[ConstraintSuite]] drives BOTH engines: this
- * interpreter for per-document hot paths, the Catalyst lowering for
- * tables; DocValidatorSpec proves verdict parity by replaying both
- * conformance corpora through each.
+ * over one Jackson tree, no SparkSession, no job. The same
+ * [[ConstraintSuite]] drives BOTH engines: this one for per-document
+ * hot paths, the Catalyst lowering for tables; DocValidatorSpec proves
+ * verdict parity by replaying both conformance corpora through each.
+ *
+ * Like the reference's template, the suite is lowered ONCE, in
+ * [[compile]]: every constraint becomes an evaluator closure
+ * `(doc, scope) => Boolean` with its paths pre-split, its regexes
+ * compiled, its enum values in a set and its bounds as
+ * `java.math.BigDecimal` (with a `long` fast path for integral nodes).
+ * A document then costs one `readTree` plus direct checks.
  *
  * Semantics mirror the Catalyst lowering exactly (content-typed
  * scalars, pass-on-null applicability, find-semantics regexes, the
  * compiler's own `expectedOf` strings in violations). Dataset-scope
  * constraints (unique / referential / drift) need a table and are
  * rejected loudly; `ExprIs` needs Spark SQL and is rejected likewise.
+ * Errors that depend on the document (`$` outside an element scope, an
+ * unsupported `typeIs`, an invalid regex) still surface at validate
+ * time, when the offending check first meets a value.
  */
 object DocValidator {
 
   final case class DocViolation(constraintId: String, observed: String,
       expected: String)
 
-  /** Compile-once artifact for the document path: resolved AST +
-    * the row-local/top-level split. Immutable and thread-safe. */
+  /** A lowered constraint: the document root and the element bound by
+    * the nearest array/map scope (`null` outside any scope) → verdict. */
+  private type Eval = (JsonNode, JsonNode) => Boolean
+
+  /** One top-level check: its verdict, its `observed` renderer over the
+    * document root, and its pre-rendered `expected` text. */
+  private[exec] final case class DocCheck(id: String, eval: Eval,
+      observed: JsonNode => String, expected: String)
+
+  /** Compile-once artifact for the document path: the lowered top-level
+    * checks. Immutable, thread-safe and serializable (it ships in task
+    * closures). */
   final case class CompiledDocSuite private[exec] (
-      suiteId: String, checks: Seq[Constraint])
+      suiteId: String, checks: Seq[DocCheck])
 
   private val mapper = new ObjectMapper()
 
@@ -59,7 +81,9 @@ object DocValidator {
           s"constraint '$id': unsupported strict format: $format")
       case _ => ()
     })
-    CompiledDocSuite(resolved.id, resolved.constraints)
+    CompiledDocSuite(resolved.id, resolved.constraints.map(c =>
+      DocCheck(c.id, lower(c), lowerObserved(c),
+        ConstraintCompiler.expectedOf(c))))
   }
 
   /** Fast boolean path. */
@@ -67,7 +91,7 @@ object DocValidator {
     validateNode(suite, parse(json))
 
   def validateNode(suite: CompiledDocSuite, doc: JsonNode): Boolean =
-    suite.checks.forall(evalPred(_, doc, None))
+    suite.checks.forall(_.eval(doc, null))
 
   /** Detail path: one violation per failing top-level constraint, with
     * the compiler's own `expected` rendering. */
@@ -75,9 +99,8 @@ object DocValidator {
       json: String): Seq[DocViolation] = {
     val doc = parse(json)
     suite.checks.collect {
-      case c if !evalPred(c, doc, None) =>
-        DocViolation(c.id, observedOf(c, doc),
-          ConstraintCompiler.expectedOf(c))
+      case c if !c.eval(doc, null) =>
+        DocViolation(c.id, c.observed(doc), c.expected)
     }
   }
 
@@ -98,49 +121,107 @@ object DocValidator {
 
   // ---- value resolution (mirrors the compiler's `res`) -------------
 
-  /** The node at a column path, None when missing/null — `$` is the
-    * element bound by the nearest array scope, `$.f.g` drills into
-    * record elements. */
-  private def at(doc: JsonNode, col: String,
-      scope: Option[JsonNode]): Option[JsonNode] = {
-    val (base, rest) =
-      if (col == "$") (scopeOrThrow(scope), Nil)
-      else if (col.startsWith("$."))
-        (scopeOrThrow(scope), col.drop(2).split('.').toList)
-      else (Some(doc), col.split('.').toList)
-    rest.foldLeft(base) { (n, f) =>
-      n.map(_.path(f)).filterNot(x => x.isMissingNode || x.isNull)
-    }.filterNot(x => x.isMissingNode || x.isNull)
+  private def present(n: JsonNode): JsonNode =
+    if (n.isMissingNode || n.isNull) null else n
+
+  /** A column path, split once: the node it addresses, or `null` when
+    * missing/JSON null. `$` is the element bound by the nearest array
+    * scope, `$.f.g` drills into record elements. */
+  private final class Path(col: String) extends Serializable {
+    private val fromScope = col == "$" || col.startsWith("$.")
+    private val fields: Array[String] =
+      if (col == "$") Array.empty
+      else if (fromScope) col.drop(2).split('.')
+      else col.split('.')
+
+    def apply(doc: JsonNode, scope: JsonNode): JsonNode = {
+      var n =
+        if (!fromScope) present(doc)
+        else if (scope == null) throw new IllegalArgumentException(
+          "'$' used outside an array-element scope") // same as the compiler
+        else present(scope)
+      var i = 0
+      while (n != null && i < fields.length) {
+        n = present(n.path(fields(i)))
+        i += 1
+      }
+      n
+    }
   }
 
-  private def scopeOrThrow(scope: Option[JsonNode]): Option[JsonNode] =
-    Some(scope.getOrElse(throw new IllegalArgumentException(
-      "'$' used outside an array-element scope"))) // same as the compiler
+  /** Pass-on-null applicability, like the lowering's `nullPasses`:
+    * `f` sees the document root and the value at `col`. */
+  private def withValue(col: String)(
+      f: (JsonNode, JsonNode) => Boolean): Eval = {
+    val path = new Path(col)
+    (doc, scope) => {
+      val v = path(doc, scope)
+      v == null || f(doc, v)
+    }
+  }
 
   /** Content string — the analogue of `cast("string")` on a typed
     * column: numbers/booleans render canonically, text verbatim.
     * Container values have NO scalar content (Jackson's asText would be
     * "") — a scalar check against an object/array value fails rather
     * than silently comparing empty strings; the table engine refuses
-    * such a suite at analysis time, so there is no parity to preserve. */
-  private def str(n: JsonNode): Option[String] =
-    if (n.isValueNode) Some(n.asText()) else None
+    * such a suite at analysis time, so there is no parity to preserve.
+    * `null` for containers. */
+  private def str(n: JsonNode): String =
+    if (n.isValueNode) n.asText() else null
 
-  private val NumericContent: Regex = FormatSpecs.numericContent.r
+  private val NumericContent = Pattern.compile(FormatSpecs.numericContent)
 
-  private def numeric(n: JsonNode): Option[BigDecimal] =
-    if (n.isNumber) Some(BigDecimal(n.decimalValue()))
-    else if (n.isTextual && NumericContent.matches(n.asText()))
-      try Some(BigDecimal(n.asText())) catch { case _: Exception => None }
-    else None
+  /** Numeric content: number nodes by value, numeric-looking text
+    * parsed; `null` otherwise. */
+  private def numeric(n: JsonNode): JBigDecimal =
+    if (n.isNumber) n.decimalValue()
+    else if (n.isTextual && NumericContent.matcher(n.asText()).matches())
+      try new JBigDecimal(n.asText()) catch { case _: Exception => null }
+    else null
 
-  // compiled-pattern cache: Pattern.compile per evaluation would
-  // dominate the microseconds-per-doc budget on regex-bearing suites
-  private val patterns =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
-  private def find(pattern: String, s: String): Boolean =
-    patterns.computeIfAbsent(pattern, java.util.regex.Pattern.compile)
-      .matcher(s).find()
+  /** Find-semantics matcher, compiled once. An invalid pattern keeps
+    * failing where the check meets a value, with the compiler's own
+    * PatternSyntaxException, rather than at suite compile. */
+  private def regex(pattern: String): String => Boolean =
+    try {
+      val p = Pattern.compile(pattern)
+      s => p.matcher(s).find()
+    } catch {
+      case _: PatternSyntaxException =>
+        s => Pattern.compile(pattern).matcher(s).find()
+    }
+
+  /** Numeric range check, compiled once. When both bounds are whole
+    * numbers that fit a `long` (the usual case), integral nodes that
+    * fit one compare as longs; everything else compares as
+    * `BigDecimal`. */
+  private final class Range(mn: Option[BigDecimal], mx: Option[BigDecimal],
+      emn: Boolean, emx: Boolean) extends Serializable {
+    private val lo = mn.map(_.bigDecimal).orNull
+    private val hi = mx.map(_.bigDecimal).orNull
+    private def exactLong(b: Option[BigDecimal]): Option[Long] =
+      try b.map(_.bigDecimal.longValueExact)
+      catch { case _: ArithmeticException => None }
+    private val longs = (mn.isEmpty || exactLong(mn).isDefined) &&
+      (mx.isEmpty || exactLong(mx).isDefined)
+    private val loL = exactLong(mn).getOrElse(Long.MinValue)
+    private val hiL = exactLong(mx).getOrElse(Long.MaxValue)
+    private val loStrict = emn && mn.isDefined
+    private val hiStrict = emx && mx.isDefined
+
+    def apply(n: JsonNode): Boolean =
+      if (longs && n.isIntegralNumber && n.canConvertToLong) {
+        val x = n.longValue()
+        (if (loStrict) x > loL else x >= loL) &&
+          (if (hiStrict) x < hiL else x <= hiL)
+      } else {
+        val d = numeric(n)
+        d != null &&
+          (lo == null || { val c = d.compareTo(lo); if (emn) c > 0 else c >= 0 }) &&
+          (hi == null || { val c = d.compareTo(hi); if (emx) c < 0 else c <= 0 })
+      }
+  }
 
   /** Order-insensitive canonical rendering for JSON equality inside
     * containers: object fields sorted recursively, numbers by value
@@ -148,8 +229,7 @@ object DocValidator {
     * typing ("1" ≠ 1) — content-typing applies only at column level. */
   private def canonical(n: JsonNode): String =
     if (n.isNumber)
-      "n" + BigDecimal(n.decimalValue())
-        .bigDecimal.stripTrailingZeros.toPlainString
+      "n" + n.decimalValue().stripTrailingZeros.toPlainString
     else if (n.isObject)
       n.properties().asScala.toSeq
         .map(e => e.getKey -> canonical(e.getValue))
@@ -160,186 +240,252 @@ object DocValidator {
       n.elements().asScala.map(canonical).mkString("[", ",", "]")
     else n.toString
 
-  private def elems(n: JsonNode): Option[Seq[JsonNode]] =
-    if (n.isArray) Some(n.elements().asScala.toSeq) else None
+  /** Element identity for `uniqueItems`: numerically equal values of
+    * different JSON node types (1 vs 1.0) are the SAME element — a
+    * typed array column would have coerced them (and the official
+    * suite's uniqueItems cases agree). Containers canonicalize (object
+    * keys sorted recursively, numbers by value): 2020-12 equality
+    * ignores property order. */
+  private def itemKeys(xs: JsonNode): Seq[String] =
+    xs.elements().asScala.map { x =>
+      val d = numeric(x)
+      if (d != null) "n:" + d.stripTrailingZeros.toPlainString
+      else if (x.isContainerNode) "c:" + canonical(x)
+      else "v:" + x.toString
+    }.toSeq
 
-  private def fields(n: JsonNode): Option[Seq[(String, JsonNode)]] =
-    if (n.isObject)
-      Some(n.properties().asScala.map(e => e.getKey -> e.getValue).toSeq)
-    else None
+  private def keys(n: JsonNode): Seq[String] =
+    n.fieldNames().asScala.toSeq
 
-  // ---- the evaluator (one case per lowerPred case) -----------------
+  private def all(n: JsonNode, from: Int)(p: JsonNode => Boolean): Boolean = {
+    var i = from.max(0)
+    while (i < n.size()) {
+      if (!p(n.get(i))) return false
+      i += 1
+    }
+    true
+  }
 
-  /** Pass-on-null applicability, like the lowering's `nullPasses`. */
-  private def withValue(doc: JsonNode, col: String,
-      scope: Option[JsonNode])(f: JsonNode => Boolean): Boolean =
-    at(doc, col, scope).forall(f)
+  private def allFields(n: JsonNode)(
+      p: java.util.Map.Entry[String, JsonNode] => Boolean): Boolean = {
+    val it = n.properties().iterator()
+    while (it.hasNext) if (!p(it.next())) return false
+    true
+  }
 
-  private[exec] def evalPred(c: Constraint, doc: JsonNode,
-      scope: Option[JsonNode]): Boolean = c match {
-    case NotNull(_, col) => at(doc, col, scope).isDefined
+  private def fail(e: => RuntimeException): Eval = (_, _) => throw e
+
+  // ---- the lowering (one case per lowerPred case) ------------------
+
+  private def lower(c: Constraint): Eval = c match {
+    case NotNull(_, col) =>
+      val path = new Path(col)
+      (doc, scope) => path(doc, scope) != null
 
     case IsIn(_, col, values) =>
-      withValue(doc, col, scope)(v => str(v).exists(values.contains))
+      val set = values.toSet
+      withValue(col)((_, v) => v.isValueNode && set.contains(v.asText()))
     case ConstEq(_, col, value) =>
-      withValue(doc, col, scope)(v => str(v).contains(value))
+      withValue(col)((_, v) => v.isValueNode && v.asText() == value)
 
     case Bounds(_, col, mn, mx, emn, emx) =>
-      withValue(doc, col, scope)(v => numeric(v).exists { d =>
-        mn.forall(b => if (emn) d > b else d >= b) &&
-          mx.forall(b => if (emx) d < b else d <= b)
-      })
+      val range = new Range(mn, mx, emn, emx)
+      withValue(col)((_, v) => range(v))
     case MultipleOf(_, col, k) =>
       // java.math remainder: exact, no MathContext — scala's wrapper
       // carries DECIMAL128 and throws "Division impossible" on huge
       // quotients (the 1e308 suite case)
-      withValue(doc, col, scope)(v => numeric(v).exists(d =>
-        d.bigDecimal.remainder(k.bigDecimal).signum() == 0))
+      val kj = k.bigDecimal
+      withValue(col) { (_, v) =>
+        val d = numeric(v)
+        d != null && d.remainder(kj).signum() == 0
+      }
 
     case LengthBounds(_, col, mn, mx) =>
-      withValue(doc, col, scope)(v => str(v).exists { s =>
+      withValue(col) { (_, v) =>
+        val s = str(v)
         // CODE POINTS, matching Spark's length() — String.length counts
         // UTF-16 units and disagrees on supplementary characters
-        val len = s.codePointCount(0, s.length)
-        mn.forall(len >= _) && mx.forall(len <= _)
-      })
+        s != null && {
+          val len = s.codePointCount(0, s.length)
+          mn.forall(len >= _) && mx.forall(len <= _)
+        }
+      }
     case Matches(_, col, pattern) =>
-      withValue(doc, col, scope)(v => str(v).exists(find(pattern, _)))
+      val find = regex(pattern)
+      withValue(col) { (_, v) => val s = str(v); s != null && find(s) }
     case FormatIs(_, col, format, strict) =>
-      if (!strict) true // annotation-only, like the lowering
-      else withValue(doc, col, scope)(v => str(v).exists { s =>
-        val spec = FormatSpecs.specs.getOrElse(format,
-          throw new IllegalArgumentException(
-            s"unsupported strict format: $format"))
-        spec.must.forall(find(_, s)) && spec.mustNot.forall(!find(_, s))
-      })
+      if (!strict) (_, _) => true // annotation-only, like the lowering
+      else {
+        // present: compile refuses unknown strict formats
+        val spec = FormatSpecs.specs(format)
+        val must = spec.must.map(regex)
+        val mustNot = spec.mustNot.map(regex)
+        withValue(col) { (_, v) =>
+          val s = str(v)
+          s != null && must.forall(_(s)) && mustNot.forall(!_(s))
+        }
+      }
 
     case SizeBounds(_, col, mn, mx) =>
-      withValue(doc, col, scope)(v => elems(v).forall { xs =>
-        mn.forall(xs.size >= _) && mx.forall(xs.size <= _)
-      })
+      withValue(col)((_, v) => !v.isArray ||
+        (mn.forall(v.size() >= _) && mx.forall(v.size() <= _)))
     case UniqueItems(_, col) =>
-      // numerically equal values of different JSON node types (1 vs
-      // 1.0) are the SAME element — a typed array column would have
-      // coerced them (and the official suite's uniqueItems cases agree).
-      // Containers canonicalize (object keys sorted recursively,
-      // numbers by value): 2020-12 equality ignores property order.
-      withValue(doc, col, scope)(v => elems(v).forall { xs =>
-        val keys = xs.map(x => numeric(x)
-          .map(d => "n:" + d.bigDecimal.stripTrailingZeros.toPlainString)
-          .getOrElse(
-            if (x.isContainerNode) "c:" + canonical(x)
-            else "v:" + x.toString))
-        keys.distinct.size == keys.size
+      withValue(col)((_, v) => !v.isArray || {
+        val ks = itemKeys(v)
+        ks.distinct.size == ks.size
       })
     case EachElement(_, col, elem) =>
-      withValue(doc, col, scope)(v => elems(v).forall(
-        _.forall(x => evalPred(elem, doc, Some(x)))))
+      val e = lower(elem)
+      withValue(col)((doc, v) => !v.isArray || all(v, 0)(e(doc, _)))
     case EachElementFrom(_, col, start, elem) =>
-      withValue(doc, col, scope)(v => elems(v).forall(
-        _.drop(start).forall(x => evalPred(elem, doc, Some(x)))))
+      val e = lower(elem)
+      withValue(col)((doc, v) => !v.isArray || all(v, start)(e(doc, _)))
     case PrefixItems(_, col, es) =>
-      withValue(doc, col, scope)(v => elems(v).forall(xs =>
-        es.zipWithIndex.forall { case (e, i) =>
-          i >= xs.size || evalPred(e, doc, Some(xs(i)))
-        }))
+      val ls = es.map(lower).toArray
+      withValue(col)((doc, v) => !v.isArray || {
+        var i = 0
+        while (i < ls.length && (i >= v.size() || ls(i)(doc, v.get(i))))
+          i += 1
+        i == ls.length
+      })
     case ContainsCount(_, col, elem, mn, mx) =>
-      withValue(doc, col, scope)(v => elems(v).forall { xs =>
-        val n = xs.count(x => evalPred(elem, doc, Some(x)))
+      val e = lower(elem)
+      withValue(col)((doc, v) => !v.isArray || {
+        var n = 0
+        var i = 0
+        while (i < v.size()) { if (e(doc, v.get(i))) n += 1; i += 1 }
         n >= mn && mx.forall(n <= _)
       })
     case UnevaluatedItems(_, _, _) =>
-      throw new IllegalStateException(
+      fail(new IllegalStateException(
         "unevaluatedItems survived the coverage pass — compile via " +
-          "DocValidator.compile")
+          "DocValidator.compile"))
 
     case KeysIn(_, col, allowed) =>
-      withValue(doc, col, scope)(v => fields(v).forall(
-        _.forall { case (k, _) => allowed.contains(k) }))
+      val set = allowed.toSet
+      withValue(col)((_, v) => !v.isObject || keys(v).forall(set.contains))
     case KeyCountBounds(_, col, mn, mx) =>
-      withValue(doc, col, scope)(v => fields(v).forall { fs =>
-        mn.forall(fs.size >= _) && mx.forall(fs.size <= _)
-      })
+      withValue(col)((_, v) => !v.isObject ||
+        (mn.forall(v.size() >= _) && mx.forall(v.size() <= _)))
     case EachKey(_, col, elem) =>
-      withValue(doc, col, scope)(v => fields(v).forall(
-        _.forall { case (k, _) =>
-          evalPred(elem, doc,
-            Some(com.fasterxml.jackson.databind.node.TextNode.valueOf(k)))
-        }))
+      val e = lower(elem)
+      withValue(col)((doc, v) => !v.isObject ||
+        keys(v).forall(k => e(doc, TextNode.valueOf(k))))
     case PropertyValues(_, col, key, elem) =>
       // A MISSING key evaluates elem with a MissingNode scope, mirroring
       // the Catalyst lowering's try_element_at(v, key) → null: NotNull
       // fails (this is how map-flavored `required` lowers), every other
-      // leaf keeps pass-on-null applicability. collectFirst().forall
-      // would silently PASS NotNull on absent keys — verdict-parity break.
-      withValue(doc, col, scope)(v => fields(v).forall { fs =>
-        val value = fs.collectFirst { case (k, x) if k == key => x }
-          .getOrElse(com.fasterxml.jackson.databind.node
-            .MissingNode.getInstance)
-        evalPred(elem, doc, Some(value))
+      // leaf keeps pass-on-null applicability. Skipping absent keys
+      // would silently PASS NotNull — verdict-parity break.
+      val e = lower(elem)
+      withValue(col)((doc, v) => !v.isObject || {
+        val x = v.get(key)
+        e(doc, if (x == null) MissingNode.getInstance else x)
       })
     case PatternValues(_, col, keyPattern, elem) =>
-      withValue(doc, col, scope)(v => fields(v).forall(
-        _.forall { case (k, x) =>
-          !find(keyPattern, k) || evalPred(elem, doc, Some(x))
-        }))
+      val find = regex(keyPattern)
+      val e = lower(elem)
+      withValue(col)((doc, v) => !v.isObject || allFields(v)(f =>
+        !find(f.getKey) || e(doc, f.getValue)))
     case UnevaluatedProperties(_, col, elem, ks, ps) =>
-      withValue(doc, col, scope)(v => fields(v).forall(
-        _.forall { case (k, x) =>
-          val covered = ks.contains(k) || ps.exists(find(_, k))
-          covered || evalPred(elem, doc, Some(x))
-        }))
+      val covered = ks.toSet
+      val finds = ps.map(regex)
+      val e = lower(elem)
+      withValue(col)((doc, v) => !v.isObject || allFields(v) { f =>
+        val k = f.getKey
+        covered.contains(k) || finds.exists(_(k)) || e(doc, f.getValue)
+      })
 
     case TypeIs(_, col, tpe) =>
-      withValue(doc, col, scope)(v => str(v).exists { s =>
-        val isNum = NumericContent.matches(s)
-        tpe match {
-          // magnitude bound mirrors the lowering's decimal(38,10)
-          // try_cast: beyond-range integer-valued numbers report false
-          // on BOTH engines
-          case "integer" => isNum && {
-            val d = BigDecimal(s)
-            // the lowering's try_cast to decimal(38,10) ROUNDS at scale
-            // 10 (HALF_UP), so "5.00000000001" is integer there; round
-            // identically before the remainder for verdict parity
-            d.abs < BigDecimal("1e28") &&
-              d.bigDecimal.setScale(10, java.math.RoundingMode.HALF_UP)
-                .remainder(java.math.BigDecimal.ONE).signum() == 0
-          }
-          case "number"  => isNum
-          case "boolean" =>
-            val l = s.toLowerCase; l == "true" || l == "false"
-          case "string"  => true
-          case other => throw new IllegalArgumentException(
-            s"unsupported typeIs: $other")
-        }
-      })
+      // integral nodes that fit a long are numbers and integers outright:
+      // their text matches the numeric shape and they sit far inside the
+      // 1e28 magnitude bound, which mirrors the lowering's decimal(38,10)
+      // try_cast (beyond-range integer-valued numbers report false on
+      // BOTH engines)
+      tpe match {
+        case "integer" => withValue(col)((_, v) =>
+          v.isValueNode && (fitsLong(v) || {
+            val s = v.asText()
+            isNum(s) && {
+              val d = new JBigDecimal(s)
+              // the lowering's try_cast to decimal(38,10) ROUNDS at
+              // scale 10 (HALF_UP), so "5.00000000001" is integer there;
+              // round identically before the remainder for verdict parity
+              d.abs.compareTo(IntegerMagnitude) < 0 &&
+                d.setScale(10, RoundingMode.HALF_UP)
+                  .remainder(JBigDecimal.ONE).signum() == 0
+            }
+          }))
+        case "number" => withValue(col)((_, v) =>
+          v.isValueNode && (fitsLong(v) || isNum(v.asText())))
+        case "boolean" => withValue(col)((_, v) => v.isValueNode && {
+          val l = v.asText().toLowerCase; l == "true" || l == "false"
+        })
+        case "string" => withValue(col)((_, v) => v.isValueNode)
+        case other => withValue(col)((_, v) => v.isValueNode &&
+          (throw new IllegalArgumentException(s"unsupported typeIs: $other")))
+      }
     case SizeConsistency(_, intCol, arrCol) =>
-      (at(doc, intCol, scope), at(doc, arrCol, scope)) match {
-        case (Some(i), Some(a)) =>
-          numeric(i).exists(d => elems(a).exists(xs =>
-            d.compareTo(BigDecimal(xs.size)) == 0))
-        case _ => true // null-tolerant, like the lowering
+      val ip = new Path(intCol)
+      val ap = new Path(arrCol)
+      (doc, scope) => {
+        val i = ip(doc, scope)
+        val a = ap(doc, scope)
+        i == null || a == null || { // null-tolerant, like the lowering
+          val d = numeric(i)
+          d != null && a.isArray &&
+            d.compareTo(JBigDecimal.valueOf(a.size().toLong)) == 0
+        }
       }
 
-    case AllOf(_, cs)  => cs.forall(evalPred(_, doc, scope))
-    case AnyOf(_, cs)  => cs.exists(evalPred(_, doc, scope))
-    case OneOf(_, cs)  => cs.count(evalPred(_, doc, scope)) == 1
-    case Not(_, c0)    => !evalPred(c0, doc, scope)
+    case AllOf(_, cs) =>
+      val ls = cs.map(lower).toArray
+      (doc, scope) => {
+        var i = 0
+        while (i < ls.length && ls(i)(doc, scope)) i += 1
+        i == ls.length
+      }
+    case AnyOf(_, cs) =>
+      val ls = cs.map(lower).toArray
+      (doc, scope) => {
+        var i = 0
+        while (i < ls.length && !ls(i)(doc, scope)) i += 1
+        i < ls.length
+      }
+    case OneOf(_, cs) =>
+      val ls = cs.map(lower).toArray
+      (doc, scope) => {
+        var n = 0
+        var i = 0
+        while (i < ls.length) { if (ls(i)(doc, scope)) n += 1; i += 1 }
+        n == 1
+      }
+    case Not(_, c0) =>
+      val l = lower(c0)
+      (doc, scope) => !l(doc, scope)
     case IfThen(_, i, t, e) =>
-      if (evalPred(i, doc, scope)) evalPred(t, doc, scope)
-      else e.forall(evalPred(_, doc, scope))
-    case BoolSchema(_, v) => v
+      val li = lower(i)
+      val lt = lower(t)
+      val le = e.map(lower).orNull
+      (doc, scope) =>
+        if (li(doc, scope)) lt(doc, scope)
+        else le == null || le(doc, scope)
+    case BoolSchema(_, v) => (_, _) => v
 
     case _: Ref | _: DynamicRef | _: Defs =>
-      throw new IllegalStateException(
+      fail(new IllegalStateException(
         "unresolved ref survived resolution — compile via " +
-          "DocValidator.compile")
+          "DocValidator.compile"))
     case c @ (_: Unique | _: RefIntegrity | _: NoDrift |
         _: NoArrayDrift | _: ExprIs) =>
-      throw new IllegalArgumentException(
-        s"'${c.id}' is not evaluable on a single document")
+      fail(new IllegalArgumentException(
+        s"'${c.id}' is not evaluable on a single document"))
   }
+
+  private val IntegerMagnitude = new JBigDecimal("1e28")
+  private def fitsLong(v: JsonNode) = v.isIntegralNumber && v.canConvertToLong
+  private def isNum(s: String) = NumericContent.matcher(s).matches()
 
   // ---- violation `observed` rendering ------------------------------
 
@@ -348,7 +494,15 @@ object DocValidator {
     * literal; containers fall back to compact JSON (the table engine
     * refuses scalar checks on containers, so no parity obligation). */
   private def content(n: JsonNode): String =
-    str(n).getOrElse(n.toString)
+    if (n.isValueNode) n.asText() else n.toString
+
+  /** Keys as violation rows list them: in the iteration order of a
+    * Scala hash set of the object's entries, not in document order. The
+    * Catalyst engine lists `map_keys` in document order, so the two
+    * engines' key summaries differ in order when they list two or more
+    * keys (pinned by DocValidatorSpec's detail golden). */
+  private def listedKeys(n: JsonNode): Seq[String] =
+    n.properties().asScala.map(e => e.getKey -> e.getValue).toSeq.map(_._1)
 
   /** First-8-keys JSON summary — parity with the compiler's
     * `keySummary` (`to_json(slice(keys,1,8))` + " +N more"). */
@@ -357,20 +511,33 @@ object DocValidator {
     if (keys.size > 8) s"$head +${keys.size - 8} more" else head
   }
 
-  /** The violation row's `observed` field — mirrors the compiler's
-    * `observedOf` (ConstraintCompiler.scala:777) case for case, so a
-    * document failing the same constraint renders the same observed
-    * text on every engine (the shared v_docjson oracle pins this for
-    * the driver suite). Missing/null values render "null", matching the
-    * Catalyst side's `coalesce(observed, 'null')`. Top-level only —
-    * detail rows are per top-level constraint on both engines. */
-  private[exec] def observedOf(c: Constraint, doc: JsonNode): String = {
-    def node(col: String): Option[JsonNode] = at(doc, col, None)
-    def sized(col: String): String =
-      node(col).flatMap(elems).map(xs => s"size=${xs.size}")
-        .getOrElse("null")
-    def keysOf(col: String): Seq[String] =
-      node(col).flatMap(fields).map(_.map(_._1)).getOrElse(Seq.empty)
+  /** The violation row's `observed` field, lowered like the verdict —
+    * mirrors the compiler's `observedOf` case for case, so a document
+    * failing the same constraint renders the same observed text on
+    * every engine (the shared v_docjson oracle pins this for the driver
+    * suite). Missing/null values render "null", matching the Catalyst
+    * side's `coalesce(observed, 'null')`. Top-level only — detail rows
+    * are per top-level constraint on both engines. */
+  private def lowerObserved(c: Constraint): JsonNode => String = {
+    def node(col: String): JsonNode => JsonNode = {
+      val path = new Path(col)
+      doc => path(doc, null)
+    }
+    def sized(col: String): JsonNode => String = {
+      val at = node(col)
+      doc => {
+        val v = at(doc)
+        if (v != null && v.isArray) s"size=${v.size()}" else "null"
+      }
+    }
+    def keysOf(col: String)(keep: String => Boolean): JsonNode => String = {
+      val at = node(col)
+      doc => {
+        val v = at(doc)
+        keySummary(if (v != null && v.isObject) listedKeys(v).filter(keep)
+          else Seq.empty)
+      }
+    }
     c match {
       case SizeBounds(_, col, _, _)          => sized(col)
       case EachElement(_, col, _)            => sized(col)
@@ -379,59 +546,78 @@ object DocValidator {
       case PrefixItems(_, col, _)            => sized(col)
       case UnevaluatedItems(_, col, _)       => sized(col)
       case UniqueItems(_, col) =>
-        node(col).flatMap(elems).map { xs =>
-          // same element-identity keys as the verdict (numbers by
-          // value, containers canonicalized) — array_distinct on the
-          // equivalent typed column coerces identically
-          val keys = xs.map(x => numeric(x)
-            .map(d => "n:" +
-              d.bigDecimal.stripTrailingZeros.toPlainString)
-            .getOrElse(
-              if (x.isContainerNode) "c:" + canonical(x)
-              else "v:" + x.toString))
-          s"distinct=${keys.distinct.size}/${keys.size}"
-        }.getOrElse("null")
+        // same element-identity keys as the verdict — array_distinct on
+        // the equivalent typed column coerces identically
+        val at = node(col)
+        doc => {
+          val v = at(doc)
+          if (v != null && v.isArray) {
+            val ks = itemKeys(v)
+            s"distinct=${ks.distinct.size}/${ks.size}"
+          } else "null"
+        }
       case KeysIn(_, col, allowed) =>
-        keySummary(keysOf(col).filter(k =>
-          allowed.isEmpty || !allowed.contains(k)))
+        val set = allowed.toSet
+        keysOf(col)(k => set.isEmpty || !set.contains(k))
       case KeyCountBounds(_, col, _, _) =>
-        node(col).flatMap(fields).map(fs => s"n_keys=${fs.size}")
-          .getOrElse("null")
-      case EachKey(_, col, _) => keySummary(keysOf(col))
+        val at = node(col)
+        doc => {
+          val v = at(doc)
+          if (v != null && v.isObject) s"n_keys=${v.size()}" else "null"
+        }
+      case EachKey(_, col, _) => keysOf(col)(_ => true)
       case PropertyValues(_, col, k, _) =>
-        node(col).flatMap(fields)
-          .flatMap(_.collectFirst { case (key, x) if key == k => x })
-          .filterNot(x => x.isMissingNode || x.isNull)
-          .map(content).getOrElse("null")
-      case PatternValues(_, col, p, _) =>
-        keySummary(keysOf(col).filter(find(p, _)))
+        val at = node(col)
+        doc => {
+          val v = at(doc)
+          val x = if (v != null && v.isObject) v.get(k) else null
+          if (x == null || x.isMissingNode || x.isNull) "null"
+          else content(x)
+        }
+      case PatternValues(_, col, p, _) => keysOf(col)(regex(p))
       case UnevaluatedProperties(_, col, _, ks, ps) =>
-        keySummary(keysOf(col).filterNot(k =>
-          ks.contains(k) || ps.exists(find(_, k))))
+        val covered = ks.toSet
+        val finds = ps.map(regex)
+        keysOf(col)(k => !(covered.contains(k) || finds.exists(_(k))))
       case SizeConsistency(_, i, a) =>
-        (node(i), node(a).flatMap(elems)) match {
-          case (Some(iv), Some(xs)) => s"${content(iv)}!=size:${xs.size}"
-          case _                    => "null"
+        val iat = node(i)
+        val aat = node(a)
+        doc => {
+          val iv = iat(doc)
+          val av = aat(doc)
+          if (iv != null && av != null && av.isArray)
+            s"${content(iv)}!=size:${av.size()}"
+          else "null"
         }
       case LengthBounds(_, col, _, _) =>
-        node(col).flatMap(str)
-          .map(s => s"len=${s.codePointCount(0, s.length)}")
-          .getOrElse("null")
+        val at = node(col)
+        doc => {
+          val v = at(doc)
+          val s = if (v == null) null else str(v)
+          if (s == null) "null" else s"len=${s.codePointCount(0, s.length)}"
+        }
       case other =>
         val cols = ConstraintCompiler.refCols(other)
-        if (cols.isEmpty) ""
-        else if (cols.sizeIs == 1)
-          node(cols.head).map(content).getOrElse("null")
-        else {
+        if (cols.isEmpty) _ => ""
+        else if (cols.sizeIs == 1) {
+          val at = node(cols.head)
+          doc => {
+            val v = at(doc)
+            if (v == null) "null" else content(v)
+          }
+        } else {
           // to_json(struct(cols…)) parity: JSON object keyed by the
           // LEAF field name (struct(col("a.b")) names the field "b"),
           // null/missing fields omitted, insertion order kept
-          val o = mapper.createObjectNode()
-          cols.foreach { cpath =>
-            node(cpath).foreach(v =>
-              o.set[JsonNode](cpath.split('.').last, v))
+          val fields = cols.map(p => p.split('.').last -> node(p))
+          doc => {
+            val o = mapper.createObjectNode()
+            fields.foreach { case (leaf, at) =>
+              val v = at(doc)
+              if (v != null) o.set[JsonNode](leaf, v)
+            }
+            mapper.writeValueAsString(o)
           }
-          mapper.writeValueAsString(o)
         }
     }
   }

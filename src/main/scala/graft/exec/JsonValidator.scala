@@ -20,8 +20,11 @@ import graft.registry.ConstraintRegistry
  *
  *  - **Schema-free** ([[verdicts]]/[[violations]]): the suite is
  *    compiled ONCE on the driver ([[DocValidator.compile]] — the same
- *    resolved AST as the Catalyst engine) and shipped in the task
- *    closure; each task interprets it over Jackson trees at ~5 µs/doc.
+ *    resolved AST as the Catalyst engine, lowered to evaluator
+ *    closures) and shipped in the task closure; each document then
+ *    costs one Jackson parse plus direct checks (the `json_docs`
+ *    benchmark on a 4-vCPU Xeon, `local[4]`, C1-only JIT: about 262k
+ *    docs/s, a pass costing 3.75 bare scans of its input).
  *    Embarrassingly parallel: one narrow projection, no shuffle, scales
  *    linearly to 10^12 rows. Handles documents whose shape is unknown
  *    or heterogeneous (map-flavored keys, mixed types).
@@ -33,7 +36,10 @@ import graft.registry.ConstraintRegistry
  * Malformed input is a VIOLATION, never a crash — the reference maps
  * any evaluation exception to `false` (`blaze_wrapper.cpp:140-146`);
  * here a row that fails to parse (or a NULL document) yields verdict
- * `false` / one violation against [[DocumentConstraint]].
+ * `false` / one violation against [[DocumentConstraint]]. A row holding
+ * a complete document followed by trailing content (`{…} trailing`,
+ * `{…}{"x":1}`, `{…}]`) is NOT malformed on any of the three paths:
+ * each validates the leading document and ignores the rest.
  */
 object JsonValidator {
 

@@ -20,6 +20,16 @@ object DedupBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(200000L)
     val cpus = args.lift(1).getOrElse("32")
+    // big-benchmark size = nDocs / GRAFT_DEDUP_BENCH_DIV (default 10).
+    // div=10 at 10^7 docs probes the FEASIBILITY boundary (broadcast
+    // dies on the 8 GiB cap; the bloom survivor join out-spills a
+    // 48 GB local disk); div=100 keeps both paths feasible so the
+    // cost comparison itself is measurable at 10^7.
+    val benchDiv = sys.env.get("GRAFT_DEDUP_BENCH_DIV").map { s =>
+      s.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"GRAFT_DEDUP_BENCH_DIV must be a positive integer, got '$s'"))
+    }.getOrElse(10L)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-dedup-bench")
@@ -58,11 +68,20 @@ object DedupBench {
     // A stage whose plan is INFEASIBLE at this scale (e.g. the
     // broadcast-decontamination path dies on Spark's hard 8 GiB
     // broadcast cap at a 10^6-doc benchmark) is itself a measurement:
-    // record the refusal instead of losing the whole run to it.
+    // record the refusal instead of losing the whole run to it. Only
+    // those two refusals count — the broadcast cap and a full disk
+    // anywhere in the cause chain; any other failure is a bug and
+    // fails the run.
+    def infeasible(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists { c =>
+        val m = String.valueOf(c.getMessage)
+        m.contains("Cannot broadcast the table that is larger than") ||
+          m.contains("No space left on device")
+      }
     def timeOrInfeasible(what: String)(body: => Long): (String, Double, Long) =
       try time(what)(body)
       catch {
-        case e: org.apache.spark.SparkException =>
+        case e: org.apache.spark.SparkException if infeasible(e) =>
           System.err.println(s"[dedupbench] $what infeasible: " +
             String.valueOf(e.getMessage).takeWhile(_ != '\n'))
           (what, -1.0, -2L)
@@ -73,13 +92,6 @@ object DedupBench {
     val onlyStages = sys.env.get("GRAFT_DEDUP_STAGES")
       .map(_.split(",").map(_.trim).toSet)
     def wanted(w: String): Boolean = onlyStages.forall(_.contains(w))
-    // big-benchmark size = nDocs / GRAFT_DEDUP_BENCH_DIV (default 10).
-    // div=10 at 10^7 docs probes the FEASIBILITY boundary (broadcast
-    // dies on the 8 GiB cap; the bloom survivor join out-spills a
-    // 48 GB local disk); div=100 keeps both paths feasible so the
-    // cost comparison itself is measurable at 10^7.
-    val benchDiv = sys.env.get("GRAFT_DEDUP_BENCH_DIV")
-      .map(_.toLong).getOrElse(10L)
 
     // warm-up (JIT + codegen)
     Dedup.exactGroups(docs, "doc_id", "text").filter($"n_dups" > 1).count()
@@ -122,8 +134,10 @@ object DedupBench {
         Dedup.minhashCandidatesFromSigs(sigs,
           numHashes = 64, bands = 16, minJaccard = 0.7).count()
       }),
-      // group assembly over the staged candidates: pairs → components
-      ("cc_groups", false, () => {
+      // group assembly over the staged candidates: pairs → components.
+      // Reads the signatures minhash_staged wrote THIS run — skipped
+      // when that stage is not selected, never fed a stale directory
+      ("cc_groups", false, () => if (!wanted("minhash_staged")) -1L else {
         val sigs = spark.read.parquet(s"/tmp/graft_dedup_bench/sigs=$nDocs")
         val pairs = Dedup.minhashCandidatesFromSigs(sigs,
           numHashes = 64, bands = 16, minJaccard = 0.7)

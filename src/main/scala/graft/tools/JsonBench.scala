@@ -14,12 +14,14 @@ import graft.exec.JsonValidator
  * execution paths — the schema-free document engine in a distributed
  * map, the from_json + Catalyst lowering, and the Spark 4 variant
  * lowering. Prints one JSON line.
- * Run: `sbt "runMain graft.tools.JsonBench [nDocs] [cpus]"`.
+ * Run: `sbt "runMain graft.tools.JsonBench [nDocs] [cpus]"` (`cpus`
+ * defaults to the machine's available processors).
  */
 object JsonBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = args.lift(1).getOrElse("32")
+    val cpus = args.lift(1)
+      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-json-bench")

@@ -93,6 +93,17 @@ class DocValidatorSpec extends AnyFunSuite {
     assert(passed >= 560)
   }
 
+  test("detail rows of both corpora match the pinned golden byte for byte") {
+    val golden = DocDetailGolden.load()
+    val got = DocDetailGolden.records()
+    assert(got.size == golden.size, "record count differs from golden")
+    val diffs = got.zip(golden).collect {
+      case (g, want) if g != want => s"want $want\n     got $g"
+    }
+    assert(diffs.size == 0, diffs.take(10).mkString("\n"))
+    assert(golden.count(_.has("rows")) >= 1390)
+  }
+
   test("single-document API: boolean path, details, error surface") {
     val suite = DocValidator.compile(ConstraintSuite("docs", Seq(
       NotNull("id_req", "doc_id"),
@@ -163,6 +174,24 @@ class DocValidatorSpec extends AnyFunSuite {
       DocValidator.compile(ConstraintSuite("f", Seq(
         FormatIs("ff", "x", "idn-email", strict = true))))
     }.getMessage.contains("idn-email"))
+  }
+
+  test("document-dependent errors surface at validate, not at compile") {
+    // an unsupported typeIs and an invalid regex compile; they throw
+    // only when a document gives the check a value (JsonValidator turns
+    // that into a _document violation)
+    val typed = DocValidator.compile(ConstraintSuite("t", Seq(
+      TypeIs("ty", "x", "date"))))
+    assert(DocValidator.validate(typed, """{"y":1}"""))
+    assert(intercept[IllegalArgumentException] {
+      DocValidator.validate(typed, """{"x":1}""")
+    }.getMessage == "unsupported typeIs: date")
+    val badRe = DocValidator.compile(ConstraintSuite("r", Seq(
+      Matches("re", "x", "(unclosed"))))
+    assert(DocValidator.validate(badRe, """{"y":1}"""))
+    intercept[java.util.regex.PatternSyntaxException] {
+      DocValidator.validate(badRe, """{"x":"a"}""")
+    }
   }
 
   test("recursive refs: declared unroll budget, fail-closed past it") {

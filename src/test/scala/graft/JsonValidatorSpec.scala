@@ -178,6 +178,41 @@ class JsonValidatorSpec extends SparkSpec {
     assert(varcol.exists(_._2 == JsonValidator.DocumentConstraint))
   }
 
+  test("trailing content after a complete document: all paths agree") {
+    val schema = StructType(Seq(
+      StructField("doc_id", StringType),
+      StructField("n_tok", IntegerType),
+      StructField("tokens", ArrayType(IntegerType)),
+      StructField("source", StringType)))
+    val ok = """{"doc_id":"a","n_tok":5,"tokens":[1,2],"source":"web"}"""
+    val bad = """{"doc_id":"b","n_tok":500,"tokens":[1],"source":"web"}"""
+    val trailing = Seq(" trailing", """{"x":1}""", "]")
+    val rows = trailing.zipWithIndex.flatMap { case (t, i) =>
+      Seq((s"ok$i", ok + t), (s"bad$i", bad + t))
+    }.toDF("id", "js")
+    val tup = (r: org.apache.spark.sql.Row) => (r.getString(0), r.getString(1))
+    val docEngine = JsonValidator
+      .violations(rows, "id", "js", JsonValidator.compile(suite))
+      .collect().map(tup).toSet
+    val typed = JsonValidator
+      .violationsTyped(rows, "id", "js", schema, suite)
+      .collect().map(tup).toSet
+    val variant = JsonValidator
+      .violationsVariant(rows, "id", "js", schema, suite)
+      .collect().map(tup).toSet
+    // the leading document is what gets validated; the trailing content
+    // is never charged to _document
+    val want = trailing.indices.map(i => (s"bad$i", "n_max")).toSet
+    assert(docEngine == want)
+    assert(typed == want)
+    assert(variant == want)
+    assert(JsonValidator
+      .verdicts(rows, "id", "js", JsonValidator.compile(suite))
+      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap ==
+      trailing.indices.flatMap(i =>
+        Seq(s"ok$i" -> true, s"bad$i" -> false)).toMap)
+  }
+
   test("round-trip: to_json of a typed table validates like the table") {
     val base = Seq(
       ("a", Seq(1, 2, 3), 3, "web"),
