@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
 import graft.ops.{Dedup, TextAnalysis}
@@ -9,7 +9,8 @@ import graft.ops.{Dedup, TextAnalysis}
  * Dedup-pipeline throughput probe: a seeded synthetic text corpus with
  * planted near-duplicates, timed through exact / MinHash+LSH / SimHash
  * dedup end-to-end. Prints one JSON line (docs/sec per stage).
- * Run: `sbt "runMain graft.tools.DedupBench [nDocs] [cpus]"`.
+ * Run: `sbt "runMain graft.tools.DedupBench [nDocs] [cpus]"` (`cpus`
+ * defaults to [[BenchSession.cpus]]).
  *
  * Corpus shape: ~120-word documents from a 50k-word synthetic
  * vocabulary; every 10th document is a near-duplicate of its
@@ -19,7 +20,7 @@ import graft.ops.{Dedup, TextAnalysis}
 object DedupBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(200000L)
-    val cpus = args.lift(1).getOrElse("32")
+    val cpus = args.lift(1).map(_.toInt).getOrElse(BenchSession.cpus)
     // big-benchmark size = nDocs / GRAFT_DEDUP_BENCH_DIV (default 10).
     // div=10 at 10^7 docs probes the FEASIBILITY boundary (broadcast
     // dies on the 8 GiB cap; the bloom survivor join out-spills a
@@ -30,14 +31,8 @@ object DedupBench {
         throw new IllegalArgumentException(
           s"GRAFT_DEDUP_BENCH_DIV must be a positive integer, got '$s'"))
     }.getOrElse(10L)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = BenchSession.builder(cpus)
       .appName("graft-dedup-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-      .config("spark.local.dir", graft.Scaling.localDir)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -26,26 +26,6 @@ object Explain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // `Explain queries q1,q2,...` — audit the join/exchange skeleton of
-    // SparkEntry queries (cartesian products and unexpected join
-    // strategies are scale bugs; catch them here, not at 100 TB)
-    if (args.headOption.contains("queries")) {
-      val names = args.lift(1).map(_.split(",").toSeq)
-        .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
-      names.foreach { q =>
-        println(s"==== $q ====")
-        val plan = graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-          .queryExecution.executedPlan.toString
-        plan.linesIterator
-          .filter(l => l.contains("Join") || l.contains("Cartesian") ||
-            l.contains("Exchange"))
-          .foreach(l => println("  " + l.trim.replaceAll("^[:+\\- ]*", "")
-            .take(140)))
-      }
-      spark.stop()
-      return
-    }
-
     val base = Files.createTempDirectory("graft-explain").toString
     SequenceGen.generate(spark, 5000L, nSources = 4, numPartitions = 4)
       .write.partitionBy("source").parquet(s"$base/data")

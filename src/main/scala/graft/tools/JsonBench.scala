@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 
@@ -15,21 +14,14 @@ import graft.exec.JsonValidator
  * map, the from_json + Catalyst lowering, and the Spark 4 variant
  * lowering. Prints one JSON line.
  * Run: `sbt "runMain graft.tools.JsonBench [nDocs] [cpus]"` (`cpus`
- * defaults to the machine's available processors).
+ * defaults to [[BenchSession.cpus]]).
  */
 object JsonBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = args.lift(1)
-      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = args.lift(1).map(_.toInt).getOrElse(BenchSession.cpus)
+    val spark = BenchSession.builder(cpus)
       .appName("graft-json-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
-      .config("spark.local.dir", graft.Scaling.localDir)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // 1-min load at start/end goes into the artifact: this box has

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /**
@@ -13,4 +14,12 @@ object GraftSqlBridge {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Blocks until every event posted to the listener bus so far has
+    * reached every listener. The bus is asynchronous: counters read
+    * right after an action returns can miss its trailing stage events,
+    * or see them bleed into the next measurement. `waitUntilEmpty` is
+    * `private[spark]`, which this package can reach. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }
